@@ -18,8 +18,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from floatchat_datapipeline_spark.gold import gold_floats
 from floatchat_datapipeline_spark.operators import cleaning
-from floatchat_datapipeline_spark.operators.aggregate import float_metadata_agg
 from floatchat_datapipeline_spark.plans.argo_views import argo_raw_df
 from floatchat_datapipeline_spark.queries import registry
 
@@ -30,29 +30,23 @@ from floatchat_datapipeline_spark.queries import registry
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the full vertical slice (SURVEY.md §7.5) as one lazy
-    plan — derive raw measurements → clean (F1-F7) → per-float metadata
-    (A1) → NL summary (C2) → stub-encode (V1) → cosine top-10 for
-    'warm tropical surface water' (O3), with the metadata columns joined
-    back onto the hits."""
+    plan — derive raw measurements → clean (F1-F7) → gold floats
+    (per-float metadata A1 → NL summary C2 → stub-encode V1) → cosine
+    top-10 over the gold vectors for 'warm tropical surface water' (O3),
+    with the metadata columns joined back onto the hits."""
     from floatchat_datapipeline_spark.embeddings.search import semantic_search
-    from floatchat_datapipeline_spark.functions.text import float_summary_v2
 
     sf_dir = "/root/testdata/sf0.001"
-    cleaned = cleaning.clean_argo(argo_raw_df(spark, sf_dir))
-    flat = float_metadata_agg(cleaned)
-    docs = flat.select(
-        "float_id",
-        float_summary_v2({c: F.col(c) for c in flat.columns}).alias("document"),
-    )
+    gold = gold_floats(cleaning.clean_argo(argo_raw_df(spark, sf_dir)))
     hits = semantic_search(
-        docs,
+        gold,
         "warm tropical surface water",
         k=10,
         text_col="document",
         id_col="float_id",
     )
     return hits.join(
-        flat.select(
+        gold.select(
             "float_id", "total_profiles", "temperature_max", "lat_min", "lat_max"
         ),
         "float_id",

@@ -8,11 +8,14 @@ the gold views:
 - structured helpers (geo box / time range / measurement range / extremes
   / depth / multi-parameter / negation) — DataFrame plans over the
   per-float metadata aggregate;
-- ``semantic_search`` — stub-encoder cosine top-k over the generated
-  float summaries (V1-V3/O3), with optional metadata pre-filter (F10).
+- ``semantic_search`` — stub-encoder cosine top-k over the stored float
+  summary vectors (V1-V3/O3), with optional metadata pre-filter (F10).
 
-The gold views are built lazily once per engine instance and persisted —
-the local stand-in for materialized silver/gold tables in a lakehouse.
+The engine builds gold once per instance (``gold.gold_floats``: metadata,
+summary document and its embedding per float) and materializes it with its
+lineage cut — the local stand-in for a written gold table in a lakehouse.
+``floats`` and ``summaries`` are projections of that one frame, and a
+semantic query encodes only its query text, on the driver.
 """
 
 from __future__ import annotations
@@ -20,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from floatchat_datapipeline_spark.embeddings.encoder import VEC_COL
+from floatchat_datapipeline_spark.gold import gold_floats
 from floatchat_datapipeline_spark.operators import cleaning
 from floatchat_datapipeline_spark.operators.aggregate import float_metadata_agg
 from floatchat_datapipeline_spark.plans.argo_views import argo_raw_df
@@ -31,33 +36,33 @@ class FloatChatEngine:
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
         self.sf_dir = sf_dir
-        self._floats: DataFrame | None = None
-        self._summaries: DataFrame | None = None
+        self._gold: DataFrame | None = None
 
     # -- gold views --------------------------------------------------------
 
     @property
-    def floats(self) -> DataFrame:
-        """Per-float metadata aggregate (A1) over the cleaned silver."""
-        if self._floats is None:
+    def gold(self) -> DataFrame:
+        """Per-float gold rows over the cleaned silver: the A1 metadata
+        aggregate, the C2 summary `document` and its `embedding`.
+
+        Built on first use and checkpointed: query plans scan the stored
+        rows and hold no lineage back to the build, so no query can
+        re-run the encoder — which a persist() cache would do on eviction."""
+        if self._gold is None:
             cleaned = cleaning.clean_argo(argo_raw_df(self.spark, self.sf_dir))
-            self._floats = float_metadata_agg(cleaned).persist()
-        return self._floats
+            self._gold = gold_floats(cleaned).localCheckpoint()
+        return self._gold
+
+    @property
+    def floats(self) -> DataFrame:
+        """Per-float metadata aggregate (A1): a projection of gold, so its
+        first use also pays the corpus encode."""
+        return self.gold.drop("document", VEC_COL)
 
     @property
     def summaries(self) -> DataFrame:
-        """(float_id, document) NL summaries (C2) for semantic search."""
-        if self._summaries is None:
-            from floatchat_datapipeline_spark.functions.text import (
-                float_summary_v2,
-            )
-
-            flat = self.floats
-            cols = {c: F.col(c) for c in flat.columns}
-            self._summaries = flat.select(
-                "float_id", float_summary_v2(cols).alias("document")
-            ).persist()
-        return self._summaries
+        """(float_id, document, embedding) NL summaries (C2) and vectors."""
+        return self.gold.select("float_id", "document", VEC_COL)
 
     # -- structured queries (the reference's SQL-pushdown half) -----------
 
@@ -132,15 +137,14 @@ class FloatChatEngine:
     def semantic_search(
         self, text: str, k: int = 5, where: Column | None = None
     ) -> DataFrame:
-        """Top-k float summaries by stub-encoder cosine; `where` is the
-        metadata pre-filter over the joined metadata columns (F10)."""
+        """Top-k float summaries by cosine of their stored vectors; `where`
+        is the metadata pre-filter over the gold columns (F10)."""
         from floatchat_datapipeline_spark.embeddings.search import (
             semantic_search,
         )
 
-        docs = self.summaries.join(self.floats, "float_id")
         return semantic_search(
-            docs, text, k=k, where=where, text_col="document", id_col="float_id"
+            self.gold, text, k=k, where=where, text_col="document", id_col="float_id"
         )
 
 

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
 STUB_DIM = 64
+VEC_COL = "embedding"  # the stored-vector column of gold and of repaired frames
 
 _MODEL = None
 
@@ -78,6 +79,15 @@ def encode_udf(texts: pd.Series) -> pd.Series:
 
 def encode_text(col: Column | str) -> Column:
     return encode_udf(F.col(col) if isinstance(col, str) else col)
+
+
+@F.pandas_udf(ArrayType(DoubleType()))
+def encode_present_udf(texts: pd.Series) -> pd.Series:
+    """V5 — encode only the non-null texts; a null text yields a null
+    vector, so the model never sees the rows a caller masked out."""
+    todo = texts.notna().to_numpy()
+    vecs = iter(np.asarray(get_model().encode(texts[todo].tolist()), dtype="float64"))
+    return pd.Series([next(vecs) if t else None for t in todo], dtype=object)
 
 
 def encode_query(text: str) -> list[float]:

@@ -3,9 +3,12 @@
 ``semantic_search`` is the reference's query engine rebuilt Spark-first:
 encode the query on the driver (V2), broadcast it as a literal, metadata
 pre-filter (F10 — filter BEFORE ranking, the cheap order), score with a
-JVM cosine expression (V3 — no Python in the hot path; the per-doc encode
-is the only pandas_udf), and TakeOrderedAndProject for top-k (O3) — no
-full sort, no driver collect of the corpus.
+JVM cosine expression (V3), and TakeOrderedAndProject for top-k (O3) — no
+full sort, no driver collect of the corpus. Over a corpus that stores its
+vectors (an ``embedding`` column, as gold does — ``gold.gold_floats``) the
+query plan has no Python at all: documents were encoded once, at build
+time, like the reference's embed-then-index split. A text-only corpus is
+encoded per query by the pandas_udf encoder (V1).
 
 ``ann_lsh_topk`` is the 100 TB path standing in for the reference's
 ivfflat/HNSW indexes (O6): random-hyperplane LSH where plane components
@@ -20,7 +23,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from floatchat_datapipeline_spark.embeddings.encoder import encode_query, encode_text
+from floatchat_datapipeline_spark.embeddings.encoder import (
+    VEC_COL,
+    encode_present_udf,
+    encode_query,
+    encode_text,
+)
 from floatchat_datapipeline_spark.functions.vector import cosine
 
 N_PLANES = 8
@@ -35,13 +43,23 @@ def semantic_search(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Top-k docs by stub-encoder cosine against `query_text`, with an
-    optional metadata pre-filter. Returns (id, score) ranked."""
+    optional metadata pre-filter. Returns (id, score) ranked.
+
+    If `docs` has a stored vector column (``embedding``), those vectors are
+    scored and no encoder runs; rows whose vector is null are left out of
+    the ranking (``repair_embeddings`` is the write-side path that fills
+    them). Otherwise every candidate's `text_col` is encoded."""
     qvec = F.array(*[F.lit(x) for x in encode_query(query_text)])
     if where is not None:
         docs = docs.filter(where)
+    if VEC_COL in docs.columns:
+        vecs = docs.filter(F.col(VEC_COL).isNotNull()).select(
+            F.col(id_col), F.col(VEC_COL).alias("_vec")
+        )
+    else:
+        vecs = docs.select(F.col(id_col), encode_text(text_col).alias("_vec"))
     return (
-        docs.select(F.col(id_col), encode_text(text_col).alias("_vec"))
-        .select(
+        vecs.select(
             id_col,
             F.round(cosine(F.col("_vec"), qvec), 6).alias("score"),
         )
@@ -132,15 +150,18 @@ def ann_lsh_topk(
 def repair_embeddings(
     df: DataFrame,
     text_col: str = "text",
-    vec_col: str = "embedding",
+    vec_col: str = VEC_COL,
 ) -> DataFrame:
     """V5 — re-encode rows whose embedding is missing; rows with a vector
-    pass through untouched (only the null slice pays the UDF)."""
+    pass through untouched. One pass over `df`: the encoder is handed the
+    text of the null rows only (null for the rest), so only they are
+    encoded. A CASE around ``encode_text`` would not do that — Spark
+    evaluates the extracted pandas_udf below the CASE, on every row."""
+    vec = F.col(vec_col)
+    text = F.when(vec.isNull(), F.coalesce(F.col(text_col), F.lit("")))
     return df.withColumn(
         vec_col,
-        F.when(F.col(vec_col).isNull(), encode_text(text_col)).otherwise(
-            F.col(vec_col)
-        ),
+        F.coalesce(vec, encode_present_udf(text).cast(df.schema[vec_col].dataType)),
     )
 
 

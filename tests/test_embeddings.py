@@ -387,3 +387,59 @@ def test_mmr_rerank_satisfies_greedy_objective(spark, sf_dir):
 
             best = max(score(i) for i in remaining)
             assert score(got_q[t]) >= best - TOL, (qid, t, got_q[t])
+
+
+def test_repair_encodes_only_the_null_rows(spark, sf_dir, tmp_path, monkeypatch):
+    """repair_embeddings makes one pass over a stored-vector table and
+    hands the encoder the text of the rows missing a vector, and only
+    that; the other rows keep their stored vector."""
+    import pandas as pd
+
+    from floatchat_datapipeline_spark.embeddings import encoder
+    from floatchat_datapipeline_spark.embeddings.search import repair_embeddings
+    from floatchat_datapipeline_spark.plans.checks import plan_string
+
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .orderBy("doc_id")
+        .collect()
+    )
+    model = get_model()
+    vecs = model.encode([r["text"] for r in docs])
+    rows = [
+        (r["doc_id"], r["text"], None if r["doc_id"] % 13 == 0 else [float(x) for x in v])
+        for r, v in zip(docs, vecs)
+    ]
+    missing = [t for _, t, v in rows if v is None]
+    assert 0 < len(missing) < len(rows)
+    path = str(tmp_path / "stored")
+    spark.createDataFrame(
+        rows, "doc_id long, text string, embedding array<double>"
+    ).write.parquet(path)
+
+    repaired = repair_embeddings(spark.read.parquet(path))
+    plan = plan_string(repaired, mode="simple")
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "encode_present_udf(CASE WHEN isnull(embedding" in plan, plan
+    got = {r["doc_id"]: r["embedding"] for r in repaired.collect()}
+    assert len(got) == len(rows)
+    for (doc_id, _, _), want in zip(rows, vecs):
+        assert np.allclose(got[doc_id], want), doc_id
+
+    # what the UDF is fed (the CASE above: text where the vector is null)
+    # reaches the model for exactly those rows
+    seen: list[str] = []
+
+    class Spy:
+        def encode(self, texts):
+            seen.extend(texts)
+            return model.encode(texts)
+
+    monkeypatch.setattr(encoder, "_MODEL", Spy())
+    out = encoder.encode_present_udf.func(
+        pd.Series([t if v is None else None for _, t, v in rows])
+    )
+    assert seen == missing
+    assert out.notna().sum() == len(missing)

@@ -400,3 +400,95 @@ def test_hive_partition_pruning_reaches_scan(spark, sf_dir, tmp_path):
     # pruning is real: the filtered scan reads exactly the one partition
     n_click = ev.filter(F.col("event_type") == "click").count()
     assert df.count() <= n_click
+
+
+# -- encode once: queries score the vectors gold stores -----------------------
+
+_SEARCH_TEXTS = (
+    "warm tropical surface water",
+    "deep cold salinity profile measurements",
+    "Argo float recorded profiles near latitude",
+)
+
+
+def _search_wheres() -> tuple:
+    return (None, F.col("temperature_max") >= 20, F.col("lat_min") <= 0)
+
+
+def test_engine_semantic_search_runs_no_encoder_and_no_join(spark, sf_dir):
+    """The engine's semantic query scans materialized gold and scores its
+    stored vectors: no Python eval node (the corpus was encoded when gold
+    was built) and no summaries/floats join, with or without a pre-filter."""
+    from floatchat_datapipeline_spark.api import FloatChatEngine
+
+    engine = FloatChatEngine(spark, sf_dir)
+    for where in (None, F.col("temperature_max") >= 20):
+        plan = plan_string(engine.semantic_search(_SEARCH_TEXTS[0], where=where))
+        assert "EvalPython" not in plan, plan
+        assert "Join" not in plan, plan
+        assert "TakeOrderedAndProject" in plan, plan
+
+
+def test_semantic_search_scores_a_stored_vector_column(spark, sf_dir):
+    """A corpus with an `embedding` column is ranked on those vectors: the
+    plan has no Python eval node at all."""
+    from floatchat_datapipeline_spark.embeddings.search import semantic_search
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    plan = plan_string(semantic_search(emb, "a query", k=5, id_col="vec_id"))
+    assert "ArrowEvalPython" not in plan, plan
+    assert "BatchEvalPython" not in plan, plan
+
+
+def test_stored_vectors_rank_exactly_as_encoding_the_text(spark, sf_dir):
+    """Same texts, same pre-filters: scoring gold's stored vectors and
+    encoding its documents return identical (float_id, score) top-k. Only
+    the text-only corpus is encoded per query."""
+    from floatchat_datapipeline_spark.api import FloatChatEngine
+    from floatchat_datapipeline_spark.embeddings.search import semantic_search
+
+    gold = FloatChatEngine(spark, sf_dir).gold
+    text_only = gold.drop("embedding")
+    for text in _SEARCH_TEXTS:
+        for where in _search_wheres():
+            got = [
+                tuple(r)
+                for r in semantic_search(
+                    gold, text, k=5, where=where,
+                    text_col="document", id_col="float_id",
+                ).collect()
+            ]
+            encoded = semantic_search(
+                text_only, text, k=5, where=where,
+                text_col="document", id_col="float_id",
+            )
+            assert "ArrowEvalPython" in plan_string(encoded)
+            want = [tuple(r) for r in encoded.collect()]
+            assert got and got == want, (text, where)
+
+
+def test_null_vector_row_is_excluded_not_reencoded(spark, sf_dir):
+    """A row whose stored vector is null drops out of the ranking (the
+    rest keeps its order) and the query still runs no encoder."""
+    from floatchat_datapipeline_spark.api import FloatChatEngine
+    from floatchat_datapipeline_spark.embeddings.search import semantic_search
+
+    gold = FloatChatEngine(spark, sf_dir).gold
+    text = _SEARCH_TEXTS[0]
+
+    def top(df, k):
+        return semantic_search(
+            df, text, k=k, text_col="document", id_col="float_id"
+        )
+
+    full = [tuple(r) for r in top(gold, 6).collect()]
+    best = full[0][0]
+    holed = gold.withColumn(
+        "embedding",
+        F.when(F.col("float_id") == best, F.lit(None)).otherwise(
+            F.col("embedding")
+        ),
+    )
+    q = top(holed, 5)
+    assert [tuple(r) for r in q.collect()] == full[1:]
+    assert "EvalPython" not in plan_string(q)
