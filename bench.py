@@ -25,6 +25,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from floatchat_datapipeline_spark import memo  # noqa: E402
 from floatchat_datapipeline_spark.session import get_spark  # noqa: E402
 
 # Headline set: one per operator family — scan+filter, group-agg, melt,
@@ -37,6 +38,21 @@ HEADLINE = (
     "top_revenue_orders",
     "cosine_topk",
 )
+
+# Queries whose cost is dominated by a one-time build held in the memo
+# store (trained quantizers, encoded codes, the dup-component closure,
+# near-dup pair frames, the purchase edge list). ann_lsh_topk holds no
+# state, but its 8-plane signature expression pays a one-time codegen
+# compile of several seconds. Each gets a *_train and a *_warm row.
+MEMOIZED = (
+    "ann_pq_topk",
+    "doc_dup_clusters",
+    "ann_ivf_topk",
+    "doc_ppjoin_pairs",
+    "doc_minhash_lsh_pairs",
+    "purchase_hits",
+)
+TRAIN_WARM = MEMOIZED + ("ann_lsh_topk",)
 
 
 def _cpu_probe() -> float:
@@ -138,11 +154,10 @@ def main() -> None:
     # which makes single-shot numbers noisy (±30% run to run). Min-of-2 is
     # the steady-state cost of the plan itself.
     #
-    # ann_pq_topk is split into cold/warm rows: its cost is dominated by
-    # one-time codebook training (model state, memoized per corpus —
+    # MEMOIZED queries are split into train/warm rows: their cost is
+    # dominated by a one-time build (model state, memoized per corpus —
     # amortized across every query at scale), so a single min-of-2 number
-    # conflates a train-once cost with the per-query scoring path. The
-    # cold row clears the training memo first; the warm row reuses it.
+    # conflates a train-once cost with the per-query path.
     # One broken query must not zero out the whole bench (round 4: a
     # single AnalysisException produced rc=1 and NO timings at all).
     # Failures are recorded per query and the run keeps going.
@@ -158,79 +173,14 @@ def main() -> None:
 
     for name in names:
         try:
-            if name == "ann_pq_topk":
-                from floatchat_datapipeline_spark.embeddings import pq  # noqa: PLC0415
-
-                pq.reset_caches()
-                timings["ann_pq_topk_train"] = round(run_once(name), 3)
-                timings["ann_pq_topk_warm"] = round(
-                    min(run_once(name), run_once(name)), 3
-                )
-                continue
-            if name == "doc_dup_clusters":
-                from floatchat_datapipeline_spark.operators import dedup  # noqa: PLC0415
-
-                dedup.clear_dup_components_cache()
-                timings["doc_dup_clusters_train"] = round(run_once(name), 3)
-                timings["doc_dup_clusters_warm"] = round(
-                    min(run_once(name), run_once(name)), 3
-                )
-                continue
-            if name == "ann_ivf_topk":
-                # Same split as PQ: the cold row carries the memoized
-                # k-means training + corpus assignment (one-time per
-                # corpus), the warm row the per-query probe (VERDICT r8
-                # item 3: driver single-runs carried ~5 s of training
-                # inside a warm-query row).
-                from floatchat_datapipeline_spark.embeddings import search  # noqa: PLC0415
-
-                search.reset_caches()
-                timings["ann_ivf_topk_train"] = round(run_once(name), 3)
-                timings["ann_ivf_topk_warm"] = round(
-                    min(run_once(name), run_once(name)), 3
-                )
-                continue
-            if name in ("doc_ppjoin_pairs", "doc_minhash_lsh_pairs"):
-                # The near-dup PAIR FRAMES are memoized corpus state
-                # shared with the D14 recall certificate
-                # (_PAIR_FRAME_CACHE): split cold build from warm read
-                # like the other model caches, or min-of-2 hides the
-                # one-time build from every row.
-                from floatchat_datapipeline_spark import queries as _q  # noqa: PLC0415
-
-                kind = "ppjoin" if name == "doc_ppjoin_pairs" else "lsh"
-                _q._PAIR_FRAME_CACHE.pop(
-                    (id(spark), sf_dir, kind), None
-                )
+            if name in TRAIN_WARM:
+                # The train row pays the one-time build (for MEMOIZED
+                # queries after emptying the memo store), the warm row
+                # is the per-query path over the warm index.
+                if name in MEMOIZED:
+                    memo.reset()
                 timings[f"{name}_train"] = round(run_once(name), 3)
                 timings[f"{name}_warm"] = round(
-                    min(run_once(name), run_once(name)), 3
-                )
-                continue
-            if name == "purchase_hits":
-                # The purchase edge list is memoized corpus state
-                # (graph.purchase_edges, the coactivity/ANN lifecycle):
-                # split the one-time edge build+checkpoint (train) from
-                # the per-query HITS iterations (warm), like the other
-                # model caches.
-                from floatchat_datapipeline_spark.operators import graph  # noqa: PLC0415
-
-                for k in [
-                    k for k in graph._EDGE_CACHE if k[0] == "purchase"
-                ]:
-                    graph._EDGE_CACHE.pop(k).unpersist()
-                timings["purchase_hits_train"] = round(run_once(name), 3)
-                timings["purchase_hits_warm"] = round(
-                    min(run_once(name), run_once(name)), 3
-                )
-                continue
-            if name == "ann_lsh_topk":
-                # No trained state, but the 8-plane signature expression
-                # pays a one-time Janino/codegen compile measured at
-                # several seconds in driver single-runs; report it as the
-                # train row so the steady-state row is the bucket probe.
-                timings["ann_lsh_topk_train"] = round(run_once(name), 3)
-                timings["ann_lsh_topk_warm"] = round(
                     min(run_once(name), run_once(name)), 3
                 )
                 continue

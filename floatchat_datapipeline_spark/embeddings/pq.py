@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
+from floatchat_datapipeline_spark import memo
 from floatchat_datapipeline_spark.functions.vector import dot
 
 PQ_M = 16
@@ -41,26 +41,7 @@ PQ_ITERS = 1
 PQ_RERANK = 50
 
 
-_PQ_CACHE: dict[tuple, list[list[tuple[int, list[float]]]]] = {}
-
-# Encoded-corpus cache: the codes TABLE is the other half of the index —
-# FAISS builds train+encode once (`index.add`) and every query scans the
-# stored codes. Keyed like _PQ_CACHE; values are persisted DataFrames of
-# (id, _code0.._code{m-1}) — ~m bytes/row, the 64× compression that lets
-# the whole index live in cluster memory at 100 TB.
-_PQ_INDEX_CACHE: dict[tuple, "DataFrame"] = {}
-
-
-def reset_caches() -> None:
-    """Drop trained codebooks and unpersist encoded-corpus tables (bench
-    cold-path isolation; tests)."""
-    for df in _PQ_INDEX_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _PQ_INDEX_CACHE.clear()
-    _PQ_CACHE.clear()
+reset_caches = memo.reset  # kept for perfbench, which calls it by name
 
 
 def pq_train(
@@ -89,13 +70,24 @@ def pq_train(
     same arithmetic — measured 12 s → <2 s at m=16 on the test corpus.
 
     Returns [codebook_s][cid] -> centroid subvector."""
-    memo = (
-        (cache_key, dim, m, ksub, iters, vec_col, id_col)
-        if cache_key
-        else None
+    return memo.lookup(
+        "pq-codebooks",
+        cache_key,
+        (dim, m, ksub, iters, vec_col, id_col),
+        emb,
+        lambda: _train_codebooks(emb, dim, m, ksub, iters, vec_col, id_col),
     )
-    if memo is not None and memo in _PQ_CACHE:
-        return _PQ_CACHE[memo]
+
+
+def _train_codebooks(
+    emb: DataFrame,
+    dim: int,
+    m: int,
+    ksub: int,
+    iters: int,
+    vec_col: str,
+    id_col: str,
+) -> list[list[tuple[int, list[float]]]]:
     dsub = dim // m
     base = emb.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
@@ -156,8 +148,6 @@ def pq_train(
             ]
             for s in range(m)
         ]
-    if memo is not None:
-        _PQ_CACHE[memo] = books
     return books
 
 
@@ -235,30 +225,35 @@ def pq_index(
     books = pq_train(
         emb, dim, m, ksub, iters, vec_col, id_col, cache_key=cache_key
     )
-    memo = (
-        (cache_key, dim, m, ksub, iters, vec_col, id_col)
-        if cache_key
-        else None
-    )
-    if memo is not None and memo in _PQ_INDEX_CACHE:
-        return books, _PQ_INDEX_CACHE[memo]
     dsub = dim // m
-    base = emb.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
+
+    def encode() -> DataFrame:
+        base = emb.select(
+            F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
+        )
+        return base.select(
+            id_col,
+            *[
+                nearest_centroid(
+                    f"slice(`{vec_col}`, {s * dsub + 1}, {dsub})", books[s]
+                ).alias(f"_code{s}")
+                for s in range(m)
+            ],
+        )
+
+    # The encoded corpus is the other half of the index (FAISS
+    # `index.add`): ~m bytes/row, persisted once per corpus version.
+    coded = (
+        memo.lookup(
+            "pq-codes",
+            cache_key,
+            (dim, m, ksub, iters, vec_col, id_col),
+            emb,
+            lambda: memo.persisted(encode()),
+        )
+        if cache_key
+        else encode()
     )
-    coded = base.select(
-        id_col,
-        *[
-            nearest_centroid(
-                f"slice(`{vec_col}`, {s * dsub + 1}, {dsub})", books[s]
-            ).alias(f"_code{s}")
-            for s in range(m)
-        ],
-    )
-    if memo is not None:
-        coded = coded.persist()
-        coded.count()  # materialize at build time, not first query
-        _PQ_INDEX_CACHE[memo] = coded
     return books, coded
 
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from floatchat_datapipeline_spark import memo
 from floatchat_datapipeline_spark.embeddings.encoder import (
     VEC_COL,
     encode_present_udf,
@@ -315,29 +316,7 @@ def _nearest_centroid_sql(
     )
 
 
-# Trained-quantizer cache: centroids are MODEL STATE — an IVF index is
-# built once per corpus and amortized over every query against it (the
-# FAISS index lifecycle; the reference persists its ivfflat index the
-# same way, ingest/schema.sql:41). Keyed by an explicit caller-supplied
-# corpus identity (e.g. the table path) plus the training hyperparams.
-_CENTROID_CACHE: dict[tuple, list[tuple[int, list[float]]]] = {}
-
-# Assigned-corpus cache: (id, vec, cluster) persisted per corpus — the
-# IVF-flat inverted lists themselves. Building it pays the k×d argmax
-# scan once per corpus; warm queries then read nprobe clusters out of
-# memory instead of re-assigning the whole corpus per query. At 100 TB
-# this is the cluster-partitioned table the docstrings describe.
-_IVF_INDEX_CACHE: dict[tuple, DataFrame] = {}
-
-
-def reset_caches() -> None:
-    for df in _IVF_INDEX_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _IVF_INDEX_CACHE.clear()
-    _CENTROID_CACHE.clear()
+reset_caches = memo.reset  # kept for perfbench, which calls it by name
 
 
 def kmeans_centroids(
@@ -376,11 +355,21 @@ def kmeans_centroids(
 
     `cache_key` (an explicit corpus identity, e.g. the source path)
     memoizes the trained quantizer: training costs 2·iters corpus passes
-    and is paid once per corpus, not once per query.
+    and is paid once per corpus version, not once per query (the FAISS
+    index lifecycle).
     """
-    memo = (cache_key, n_centroids, iters, vec_col, id_col) if cache_key else None
-    if memo is not None and memo in _CENTROID_CACHE:
-        return _CENTROID_CACHE[memo]
+    return memo.lookup(
+        "ivf-centroids",
+        cache_key,
+        (n_centroids, iters, vec_col, id_col),
+        emb,
+        lambda: _train_centroids(emb, n_centroids, iters, vec_col, id_col),
+    )
+
+
+def _train_centroids(
+    emb: DataFrame, n_centroids: int, iters: int, vec_col: str, id_col: str
+) -> list[tuple[int, list[float]]]:
     base = emb.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
     )
@@ -423,8 +412,6 @@ def kmeans_centroids(
         cents = sorted(
             (int(r["cluster"]), [float(x) for x in r["_cvec"]]) for r in rows
         )
-    if memo is not None:
-        _CENTROID_CACHE[memo] = cents
     return cents
 
 
@@ -450,21 +437,26 @@ def ann_ivf_topk(
     base = emb.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
     )
-    memo = (
-        (cache_key, n_centroids, iters, vec_col, id_col)
-        if cache_key
-        else None
-    )
-    if memo is not None and memo in _IVF_INDEX_CACHE:
-        assigned = _IVF_INDEX_CACHE[memo]
-    else:
-        assigned = base.withColumn(
+
+    def assign() -> DataFrame:
+        return base.withColumn(
             "cluster", nearest_centroid(f"`{vec_col}`", cents)
         )
-        if memo is not None:
-            assigned = assigned.persist()
-            assigned.count()  # build the inverted lists at index time
-            _IVF_INDEX_CACHE[memo] = assigned
+
+    # The assigned corpus (id, vec, cluster) is the IVF-flat inverted
+    # lists themselves: memoized, the k×d argmax scan is paid once per
+    # corpus version and warm queries read nprobe clusters out of memory.
+    assigned = (
+        memo.lookup(
+            "ivf-index",
+            cache_key,
+            (n_centroids, iters, vec_col, id_col),
+            emb,
+            lambda: memo.persisted(assign()),
+        )
+        if cache_key
+        else assign()
+    )
     # Read the query vector out of the (possibly cached) assigned table —
     # under a warm index this is an in-memory lookup, not a parquet scan.
     q = assigned.filter(F.col(id_col) == query_id).select(

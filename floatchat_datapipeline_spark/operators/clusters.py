@@ -32,22 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from floatchat_datapipeline_spark import memo
+
 CC_MAX_ITERS = 20
-
-
-# Memoized deduped-corpus frames for semdedup (the graph._EDGE_CACHE
-# convention): keyed by (cache_key, applicationId) so a cached frame
-# never leaks across sessions; cleared via reset_semdedup_cache.
-_DEDUP_EMB_CACHE: dict[tuple, DataFrame] = {}
-
-
-def reset_semdedup_cache() -> None:
-    for df in _DEDUP_EMB_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _DEDUP_EMB_CACHE.clear()
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -224,24 +211,19 @@ def semdedup(
     # unordered rn = 1 (indistinguishable in the only reachable case,
     # byte-identical duplicate rows; real corpora have unique ids and
     # the extra exchange re-uses the shuffle the pair stage needs
-    # anyway). Eagerly checkpointed AND memoized per corpus (the
-    # graph._EDGE_CACHE convention): the k-means loop and the three
-    # downstream consumers each re-execute their input lineage, and a
-    # re-run dedup SHUFFLE per Lloyd iteration measured 2.6 s → 7.5 s
-    # on the cold emb_semdedup row; the checkpoint pays the dedup once
-    # per call and the memo once per corpus.
-    spark = emb.sparkSession
-    memo = (
-        ("semdedup-emb", cache_key, id_col, spark.sparkContext.applicationId)
-        if cache_key
-        else None
+    # anyway). Eagerly checkpointed AND memoized per corpus version: the
+    # k-means loop and the three downstream consumers each re-execute
+    # their input lineage, and a re-run dedup SHUFFLE per Lloyd iteration
+    # measured 2.6 s → 7.5 s on the cold emb_semdedup row; the checkpoint
+    # pays the dedup once per call and the memo once per corpus.
+    raw = emb
+    emb = memo.lookup(
+        "semdedup-emb",
+        cache_key,
+        (id_col,),
+        raw,
+        lambda: raw.dropDuplicates([id_col]).localCheckpoint(eager=True),
     )
-    if memo is not None and memo in _DEDUP_EMB_CACHE:
-        emb = _DEDUP_EMB_CACHE[memo]
-    else:
-        emb = emb.dropDuplicates([id_col]).localCheckpoint(eager=True)
-        if memo is not None:
-            _DEDUP_EMB_CACHE[memo] = emb
     cents = kmeans_centroids(
         emb, n_centroids, vec_col=vec_col, id_col=id_col, cache_key=cache_key
     )

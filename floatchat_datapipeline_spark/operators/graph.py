@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from floatchat_datapipeline_spark import memo
 from floatchat_datapipeline_spark.functions.eventtime import (
     epoch_micros,
     long_div,
@@ -45,18 +46,6 @@ from floatchat_datapipeline_spark.functions.eventtime import (
 # rank resolution at a million nodes.
 PAGERANK_MASS = 10**15
 DAMPING_NUM, DAMPING_DEN = 85, 100
-
-
-_EDGE_CACHE: dict[tuple, DataFrame] = {}
-
-
-def reset_edge_cache() -> None:
-    for df in _EDGE_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _EDGE_CACHE.clear()
 
 
 def coactivity_edges(
@@ -83,22 +72,25 @@ def coactivity_edges(
     needed in pagerank_fixed_point); users never co-active with anyone
     are not nodes.
     """
-    # Per-corpus memo (the ANN-codebook lifecycle, embeddings/search.py):
-    # PageRank and the triangle census share the same edge list in one
-    # session — build it once, localCheckpoint, reuse. cache_key opts in
-    # (the corpus must be stable for the key); reset_edge_cache() clears.
-    # The memo key includes the SparkSession's applicationId: a cached
-    # DataFrame is bound to its session, so after a session restart in the
-    # same process a key that ignored the session would hand back a handle
-    # on dead RDD state.
-    spark = events.sparkSession
-    memo = (
-        (cache_key, bucket_cap, slot_seconds, spark.sparkContext.applicationId)
-        if cache_key
-        else None
+    # Per-corpus memo: PageRank and the triangle census share the same
+    # edge list in one session — build it once, localCheckpoint, reuse
+    # until the events table changes. cache_key opts in.
+    if not cache_key:
+        return _coactivity_edges(events, bucket_cap, slot_seconds)
+    return memo.lookup(
+        "coactivity-edges",
+        cache_key,
+        (bucket_cap, slot_seconds),
+        events,
+        lambda: _coactivity_edges(
+            events, bucket_cap, slot_seconds
+        ).localCheckpoint(eager=True),
     )
-    if memo is not None and memo in _EDGE_CACHE:
-        return _EDGE_CACHE[memo]
+
+
+def _coactivity_edges(
+    events: DataFrame, bucket_cap: int, slot_seconds: int
+) -> DataFrame:
     slot_us = slot_seconds * 1_000_000
     members = events.select(
         "event_type",
@@ -127,15 +119,11 @@ def coactivity_edges(
             ),
         )
     )
-    edges = (
+    return (
         buckets.select(F.explode(pair_arr).alias("p"))
         .select("p.src", "p.dst")
         .distinct()
     )
-    if memo is not None:
-        edges = edges.localCheckpoint(eager=True)
-        _EDGE_CACHE[memo] = edges
-    return edges
 
 
 def pagerank_fixed_point(
@@ -637,18 +625,9 @@ def purchase_edges(
 ) -> DataFrame:
     """Distinct customer→supplier purchase edges from orders ⋈ lineitem
     — the bipartite graph G11's HITS runs on. Memoized per corpus with
-    the coactivity_edges lifecycle (_EDGE_CACHE + eager localCheckpoint):
+    the coactivity_edges lifecycle (memo store + eager localCheckpoint):
     the edge list is corpus state shared by every query of the graph
-    family, built once per corpus, not once per call. The memo key is
-    namespaced so reset_edge_cache() clears both families together."""
-    spark = orders.sparkSession
-    memo = (
-        ("purchase", cache_key, spark.sparkContext.applicationId)
-        if cache_key
-        else None
-    )
-    if memo is not None and memo in _EDGE_CACHE:
-        return _EDGE_CACHE[memo]
+    family, built once per corpus version, not once per call."""
     edges = (
         orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
         .select(
@@ -657,10 +636,15 @@ def purchase_edges(
         )
         .distinct()
     )
-    if memo is not None:
-        edges = edges.localCheckpoint(eager=True)
-        _EDGE_CACHE[memo] = edges
-    return edges
+    if not cache_key:
+        return edges
+    return memo.lookup(
+        "purchase-edges",
+        cache_key,
+        (),
+        edges,
+        lambda: edges.localCheckpoint(eager=True),
+    )
 
 
 def hits_fixed_point(

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from floatchat_datapipeline_spark import memo
 from floatchat_datapipeline_spark.operators.cleaning import clean_float_id
 
 
@@ -126,13 +127,6 @@ def _bloom_join_positions(col, k: int = BLOOM_JOIN_HASHES, m: int = BLOOM_JOIN_B
     return [F.pmod(h1 + F.lit(i) * h2, F.lit(m)) for i in range(k)]
 
 
-_BLOOM_JOIN_CACHE: dict = {}
-
-
-def reset_bloom_join_cache() -> None:
-    _BLOOM_JOIN_CACHE.clear()
-
-
 _INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
 
 
@@ -169,7 +163,7 @@ def bloom_semi_join(
     This is the manual, composable form of Spark's runtime bloom-join
     filter (spark.sql.optimizer.runtimeFilter.bloomFilter.*), usable
     where the optimizer won't inject one (non-equi gates, pre-aggregated
-    build sides, cross-session reuse of the packed filter).
+    build sides, reuse of the packed filter across calls).
     """
     m, k = BLOOM_JOIN_BITS, BLOOM_JOIN_HASHES
     fact_t = fact.schema[fact_key].dataType.simpleString()
@@ -193,9 +187,8 @@ def bloom_semi_join(
             F.count(F.lit(1)), F.coalesce(F.expr("bit_xor(xxhash64(_k))"), F.lit(0))
         ).first()
     )
-    cached = _BLOOM_JOIN_CACHE.get(cache_key) if cache_key else None
-    words = cached[1] if cached is not None and cached[0] == fp else None
-    if words is None:
+
+    def pack() -> list[int]:
         pos = (
             key_set.select(
                 F.explode(
@@ -214,8 +207,9 @@ def bloom_semi_join(
         words = [0] * (m // 64)
         for r in pos:
             words[r["w"]] = r["bits"]
-        if cache_key:
-            _BLOOM_JOIN_CACHE[cache_key] = (fp, words)
+        return words
+
+    words = memo.lookup("bloom-filter", cache_key, (fp,), keys, pack)
 
     # Carry the packed filter as a broadcast 1-row relation, NOT an
     # array literal: the k bit tests would each inline their own copy of

@@ -94,12 +94,14 @@ def _mask_fill(arr: np.ndarray, attrs: dict, var: str) -> np.ndarray:
 
 def decode_cf_time(values: np.ndarray, units: str) -> pd.Series:
     """CF "days/hours/seconds since <epoch>" → UTC timestamps (reference
-    load_data.py:333-375). Invalid/missing → NaT."""
+    load_data.py:333-375). Invalid/missing → NaT. Rounded to µs, the
+    precision Spark stores: a fractional day decodes with a ns residue
+    (25581.1 days is 02:23:59.999999870) that Arrow refuses to cast."""
     unit_word, _, epoch = units.partition(" since ")
     step = {"days": "D", "hours": "h", "seconds": "s"}[unit_word.strip()]
     base = pd.Timestamp(epoch.strip())
     vals = pd.to_numeric(pd.Series(values.ravel()), errors="coerce")
-    return base + pd.to_timedelta(vals, unit=step)
+    return (base + pd.to_timedelta(vals, unit=step)).dt.round("us")
 
 
 def decode_npz_bytes(content: bytes) -> tuple[dict[str, np.ndarray], dict]:

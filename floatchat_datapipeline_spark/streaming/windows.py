@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from floatchat_datapipeline_spark import memo
+
 SESSION_GAP = "30 minutes"
 WATERMARK = "1 hour"
 
@@ -384,18 +386,6 @@ def _type_counters_apiws(events: DataFrame) -> DataFrame:
     )
 
 
-_LSH_INDEX_CACHE: dict[tuple, DataFrame] = {}
-
-
-def reset_lsh_index_cache() -> None:
-    for df in _LSH_INDEX_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _LSH_INDEX_CACHE.clear()
-
-
 def neardup_intake_stream(
     stream_docs: DataFrame,
     corpus_docs: DataFrame,
@@ -424,13 +414,8 @@ def neardup_intake_stream(
 
     from floatchat_datapipeline_spark.operators.dedup import lsh_band_keys
 
-    memo = (cache_key, max_bucket) if cache_key else None
-    if memo is not None and memo in _LSH_INDEX_CACHE:
-        corpus_keys = _LSH_INDEX_CACHE[memo]
-    else:
-        corpus_keys = lsh_band_keys(
-            corpus_docs, id_col="doc_id"
-        ).select(
+    def corpus_index() -> DataFrame:
+        keys = lsh_band_keys(corpus_docs, id_col="doc_id").select(
             F.col("doc_id").alias("corpus_id"), "band", "band_key"
         )
         bucket_n = F.count(F.lit(1)).over(W.partitionBy("band", "band_key"))
@@ -438,17 +423,18 @@ def neardup_intake_stream(
         # the static plan every micro-batch, which would recompute the
         # corpus minhash per batch — the localCheckpoint is the harness
         # stand-in for the persisted bucketed index table named below,
-        # and the memo (same lifecycle as the PQ/IVF codebooks,
-        # embeddings/search.py) makes the build a one-time per-corpus
-        # cost rather than a per-query one
-        corpus_keys = (
-            corpus_keys.withColumn("_n", bucket_n)
+        # and the memo (same lifecycle as the PQ/IVF codebooks) makes the
+        # build a one-time per-corpus cost rather than a per-query one
+        return (
+            keys.withColumn("_n", bucket_n)
             .filter(F.col("_n") <= max_bucket)
             .drop("_n")
             .localCheckpoint(eager=True)
         )
-        if memo is not None:
-            _LSH_INDEX_CACHE[memo] = corpus_keys
+
+    corpus_keys = memo.lookup(
+        "lsh-index", cache_key, (max_bucket,), corpus_docs, corpus_index
+    )
     # a file-source micro-batch arrives with one partition per FILE, so
     # without this the whole batch's minhash runs on one core; the
     # repartition is the streaming stand-in for rebalance (whose width

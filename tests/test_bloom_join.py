@@ -122,18 +122,16 @@ def test_bloom_cache_rebuilds_on_changed_key_set(spark):
     """The memoized packed filter carries a key-set fingerprint: reusing
     a cache_key after the build side changed must REBUILD, not serve
     stale bits that false-negate the new keys (ADVICE r6)."""
-    from floatchat_datapipeline_spark.operators.joins import (
-        reset_bloom_join_cache,
-    )
+    from floatchat_datapipeline_spark import memo
 
-    reset_bloom_join_cache()
+    memo.reset()
     a = spark.createDataFrame([(x,) for x in range(10)], "k: bigint")
     b = spark.createDataFrame([(x,) for x in range(1000, 1010)], "k: bigint")
     fact = a.unionByName(b).select(F.col("k").alias("fk"))
     assert bloom_semi_join(fact, a, "fk", "k", cache_key="t").count() == 10
     got = bloom_semi_join(fact, b, "fk", "k", cache_key="t")
     assert sorted(r["fk"] for r in got.collect()) == list(range(1000, 1010))
-    reset_bloom_join_cache()
+    memo.reset()
 
 
 def test_bloom_no_false_negatives_on_adversarial_keys(spark):

@@ -260,15 +260,16 @@ def test_ivf_warm_query_uses_cached_inverted_lists(spark, sf_dir):
 
 
 def test_pq_reset_caches_clears_index(spark, sf_dir):
+    from floatchat_datapipeline_spark import memo
     from floatchat_datapipeline_spark.embeddings import pq
 
     pq.reset_caches()
     emb = load_table(spark, sf_dir, "embeddings")
     key = f"{sf_dir}/embeddings.parquet#test-reset"
     pq.pq_adc_topk(emb, query_id=1, k=5, cache_key=key, rerank=10).collect()
-    assert pq._PQ_INDEX_CACHE and pq._PQ_CACHE
+    assert {"pq-codebooks", "pq-codes"} <= {s[0] for s in memo._STORE}
     pq.reset_caches()
-    assert not pq._PQ_INDEX_CACHE and not pq._PQ_CACHE
+    assert not memo._STORE
 
 
 def test_nearest_centroid_sql_path_matches_column_path(spark, sf_dir):

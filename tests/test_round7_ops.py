@@ -395,22 +395,20 @@ def test_edge_cache_lifecycle(spark, sf_dir):
     """coactivity_edges(cache_key=...) must serve the SAME checkpointed
     relation on a hit and rebuild after reset (the LSH-index memo
     contract applied to the graph family)."""
+    from floatchat_datapipeline_spark import memo
     from floatchat_datapipeline_spark.catalog import load_table
-    from floatchat_datapipeline_spark.operators.graph import (
-        coactivity_edges,
-        reset_edge_cache,
-    )
+    from floatchat_datapipeline_spark.operators.graph import coactivity_edges
 
-    reset_edge_cache()
+    memo.reset()
     ev = load_table(spark, sf_dir, "events")
     e1 = coactivity_edges(ev, cache_key="t7")
     e2 = coactivity_edges(ev, cache_key="t7")
     assert e1 is e2  # memo hit returns the identical checkpointed DF
     n = e1.count()
-    reset_edge_cache()
+    memo.reset()
     e3 = coactivity_edges(ev, cache_key="t7")
     assert e3 is not e1 and e3.count() == n
-    reset_edge_cache()
+    memo.reset()
 
 
 def test_ranged_cumsum_equals_global_window(spark):

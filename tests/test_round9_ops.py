@@ -110,15 +110,16 @@ def test_trade_edges_memoized_per_session(spark, sf_dir):
     (corpus, session) — a second call must return the SAME checkpointed
     DataFrame, and the memo key must carry the applicationId (the
     coactivity-edge session-restart rule)."""
+    from floatchat_datapipeline_spark import memo
     from floatchat_datapipeline_spark import queries as Q
 
     e1 = Q._trade_edges(spark, sf_dir)
     e2 = Q._trade_edges(spark, sf_dir)
     assert e1 is e2
     app = spark.sparkContext.applicationId
-    assert any(k[1] == app for k in Q._TRADE_EDGE_CACHE), (
-        "memo key must include applicationId"
-    )
+    assert any(
+        s[0] == "trade-edges" and s[3] == app for s in memo._STORE
+    ), "memo key must include applicationId"
 
 
 def test_bench_snapshot_contention_gates():

@@ -7,6 +7,7 @@ import math
 import shutil
 import tempfile
 
+import numpy as np
 import pytest
 
 from floatchat_datapipeline_spark.sources.fixtures import (
@@ -74,6 +75,25 @@ def test_read_argo_end_to_end(fixture_dir, spark):
     # lineage column present and file-scoped
     files = {r[0] for r in df.select("source_file").distinct().collect()}
     assert len(files) == 2  # .txt file gated out by the glob
+
+
+def test_read_argo_fractional_day_time(spark, tmp_path):
+    """A JULD with a fractional day decodes to a timestamp with a sub-µs
+    residue (25581.1 days is 02:23:59.999999870 in float arithmetic);
+    Spark stores µs, so the decoder rounds instead of failing the job."""
+    import datetime
+
+    variables = {
+        "PLATFORM_NUMBER": np.array(["1900975"]),
+        "JULD": np.array([25581.1]),
+        "LATITUDE": np.array([-5.2]),
+        "LONGITUDE": np.array([72.5]),
+        "PRES": np.array([[5.0, 100.0]]),
+    }
+    attrs = {"JULD": {"units": "days since 1950-01-01"}}
+    (tmp_path / "frac_001.nc").write_bytes(npz_bytes(variables, attrs))
+    rows = read_argo(spark, str(tmp_path)).select("time").collect()
+    assert [r["time"] for r in rows] == [datetime.datetime(2020, 1, 15, 2, 24)] * 2
 
 
 def test_inspect_report(fixture_dir, spark):

@@ -200,18 +200,20 @@ def test_neardup_intake_index_memoized(spark, sf_dir):
     """S15: the corpus band-key index must build once per cache_key (the
     PQ/IVF codebook lifecycle) — the second call reuses the materialized
     RDD instead of re-running the corpus minhash."""
+    from floatchat_datapipeline_spark import memo
     from floatchat_datapipeline_spark.streaming import windows as sw
 
-    sw.reset_lsh_index_cache()
+    memo.reset()
     docs = load_table(spark, sf_dir, "documents")
     # build via the batch path twice with the same key
     out1 = sw.neardup_intake_stream(docs, docs, cache_key="k1")
     n1 = out1.count()
-    assert ("k1", 4096) in sw._LSH_INDEX_CACHE
-    cached = sw._LSH_INDEX_CACHE[("k1", 4096)]
+    (slot,) = [s for s in memo._STORE if s[0] == "lsh-index"]
+    assert slot[1:3] == ("k1", (4096,))
+    cached = memo._STORE[slot][1]
     out2 = sw.neardup_intake_stream(docs, docs, cache_key="k1")
-    assert sw._LSH_INDEX_CACHE[("k1", 4096)] is cached
+    assert memo._STORE[slot][1] is cached
     assert out2.count() == n1
     # the cached index is a materialized lineage cut, not the live plan
     assert "ExistingRDD" in cached._jdf.queryExecution().executedPlan().toString()
-    sw.reset_lsh_index_cache()
+    memo.reset()

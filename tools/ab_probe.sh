@@ -1,18 +1,26 @@
 #!/bin/bash
-# Wait for a healthy CPU window, then probe the named queries on the
-# pre-optimization worktree (/tmp/r13_base) and the current tree
-# back-to-back, same window. Usage: ab_probe.sh q1,q2,... [reps] [tag]
+# Wait for a healthy CPU window, then probe the named queries on a base
+# checkout ($AB_BASE) and on this tree back-to-back, same window.
+# Usage: AB_BASE=<base checkout> ab_probe.sh q1,q2,... [reps] [tag]
+# Env: AB_OUT (result dir, default .).
 set -u
 QUERIES="$1"
 REPS="${2:-3}"
 TAG="${3:-ab}"
+BASE="${AB_BASE:?set AB_BASE to the base checkout}"
+OUT="$(cd "${AB_OUT:-.}" && pwd)"
+HERE="$(cd "$(dirname "$0")/.." && pwd)"
 probe() {
-  python - <<'EOF'
+  # bench.py's fixed-work steal gauge, timed inside a function as
+  # query_probe.py does (a module-level loop reads about 2.5x slower)
+  python - <<'PY'
 import time
-t0=time.time(); s=0
-for i in range(10_000_000): s+=i
-print(round(time.time()-t0,3))
-EOF
+def gauge():
+    t0=time.time(); s=0
+    for i in range(10_000_000): s+=i
+    return round(time.time()-t0,3)
+print(gauge())
+PY
 }
 for i in $(seq 1 240); do
   P=$(probe)
@@ -20,8 +28,8 @@ for i in $(seq 1 240); do
   if [ "$OK" = "1" ]; then echo "healthy probe $P after $i checks"; break; fi
   echo "probe $P — steal window, waiting ($i)"; sleep 60
 done
-cd /tmp/r13_base && python tools/query_probe.py "$QUERIES" "$REPS" > /tmp/${TAG}_base.json 2>/tmp/${TAG}_base.err
-echo "base done: $(tail -c 400 /tmp/${TAG}_base.json)"
-cd /root/repo && python tools/query_probe.py "$QUERIES" "$REPS" > /tmp/${TAG}_new.json 2>/tmp/${TAG}_new.err
-echo "new done: $(tail -c 400 /tmp/${TAG}_new.json)"
+cd "$BASE" && python tools/query_probe.py "$QUERIES" "$REPS" > "$OUT/${TAG}_base.json" 2>"$OUT/${TAG}_base.err"
+echo "base done: $(tail -c 400 "$OUT/${TAG}_base.json")"
+cd "$HERE" && python tools/query_probe.py "$QUERIES" "$REPS" > "$OUT/${TAG}_new.json" 2>"$OUT/${TAG}_new.err"
+echo "new done: $(tail -c 400 "$OUT/${TAG}_new.json")"
 probe
