@@ -14,6 +14,9 @@ the settings that matter at 100 TB:
 - UTC session timezone: the reference coerces all timestamps to UTC
   (reference preprocess.py:226); we pin it at the session level so
   timestamp semantics are environment-independent.
+- Local masters: Python workers run ``pyworker.py``'s daemon, which spares
+  each task PySpark's re-read of pyspark.zip, with the package root on
+  their PYTHONPATH.
 """
 
 from __future__ import annotations
@@ -23,6 +26,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WORKER_DAEMON = "floatchat_datapipeline_spark.pyworker"
 
 
 def get_spark(
@@ -60,6 +65,15 @@ def get_spark(
         # tz), not TIMESTAMP_NTZ — watermarks/unix_micros need TIMESTAMP.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if master.startswith("local"):
+        # Python workers start from this package's daemon (pyworker.py), so
+        # they must find the package wherever the session was started.
+        # Local only: a cluster's executors have no copy at PACKAGE_ROOT.
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            p for p in (PACKAGE_ROOT, conf.get("spark.executorEnv.PYTHONPATH")) if p
+        )
+        conf.setdefault("spark.python.daemon.module", WORKER_DAEMON)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
