@@ -3149,7 +3149,7 @@ GROUP BY 1, 2
 
 
 def q_netcdf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S2/S4/P1/P2/R1 — the binaryFile + mapInPandas profile-file reader
+    """S2/S4/P1/P2/R1 — the binaryFile + mapInArrow profile-file reader
     over deterministic fixture files (alias fallback, fill masking, CF
     day/hour time units, 2-D→long expansion, glob gate). The oracle is the
     expected-output VALUES literal rendered from the same constants."""

@@ -9,8 +9,10 @@ the settings that matter at 100 TB:
 - ``spark.sql.shuffle.partitions`` sized for the test harness (32 local
   cores); on a real cluster AQE coalesces from a high initial number, so
   this is a floor, not a magic constant.
-- Arrow enabled: every pandas_udf / mapInPandas boundary is Arrow-batched
-  (the reference's row-at-a-time iterrows() pattern is the anti-model).
+- Arrow enabled: every pandas_udf / mapInPandas boundary is Arrow-batched,
+  and the profile-file decoder (``read_argo``) hands Spark Arrow record
+  batches directly through mapInArrow (the reference's row-at-a-time
+  iterrows() pattern is the anti-model).
 - UTC session timezone: the reference coerces all timestamps to UTC
   (reference preprocess.py:226); we pin it at the session level so
   timestamp semantics are environment-independent.

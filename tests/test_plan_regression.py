@@ -94,6 +94,27 @@ def test_census_covers_registry(fresh_census):
     assert not missing, f"census skipped queries: {sorted(missing)[:5]}"
 
 
+PYTHON_NODES = (
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "FlatMapGroupsInPandas",
+    "MapInPandas",
+    "MapInArrow",
+    "FlatMapCoGroupsInPandas",
+)
+
+
+def test_census_counts_every_python_node(fresh_census):
+    """Each Python eval node the engine plans is one Arrow seam in the
+    census, and the fresh count matches the committed baseline (a node
+    name the regex misses would silently read 0)."""
+    for node in PYTHON_NODES:
+        plan = f"*(1) Project [a#1]\n+- {node} f(a#0)#2, [a#1], false\n"
+        assert plan_audit.census_one(plan)[4] == 1, node
+    committed = plan_audit.parse_committed()["netcdf_ingest"]  # mapInArrow
+    assert fresh_census["netcdf_ingest"][5] == committed["py_nodes"] == 1
+
+
 def test_gate_detects_a_pessimization(fresh_census):
     """Meta-test: the SHARED find_regressions logic (the same call the
     main test makes) must flag synthetic pessimizations and pass the

@@ -1,8 +1,9 @@
 """Property-based tests (hypothesis) for the pure decode/encode kernels.
 
-These run without Spark — they pin the per-row functions that executors
-apply inside mapInPandas/pandas_udf, where a silent edge-case bug would
-corrupt data at scale without failing any fixed-fixture test.
+These run without Spark — they pin the per-row and per-batch functions
+that executors apply inside mapInArrow/pandas_udf, where a silent
+edge-case bug would corrupt data at scale without failing any
+fixed-fixture test.
 """
 
 from __future__ import annotations
@@ -11,11 +12,18 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from floatchat_datapipeline_spark.embeddings.encoder import _StubModel
-from floatchat_datapipeline_spark.sources.netcdf import decode_cf_time
+from floatchat_datapipeline_spark.sources.fixtures import npz_bytes
+from floatchat_datapipeline_spark.sources.netcdf import (
+    ARGO_ARROW_SCHEMA,
+    decode_cf_time,
+    decode_profile_batches,
+    decode_profile_file,
+)
 
 TOKENS = st.text(
     alphabet=st.characters(whitelist_categories=("Ll", "Lu", "Nd")),
@@ -71,6 +79,114 @@ def test_cf_time_decode_roundtrip(values, unit):
             expect_us = round(v * mult * 1_000_000)
             got_us = (ts - base).value // 1000
             assert abs(got_us - expect_us) <= 1
+
+
+# ---------------------------------------------------------------------------
+# Profile-file decoder: the batch decoder that read_argo hands Spark equals
+# the per-file decode, concatenated, over random files — fill values,
+# measurement dtypes, byte-string ids, NaN / fractional / missing times,
+# missing lat/lon and mixed CF time units within one batch.
+# ---------------------------------------------------------------------------
+
+TIME_UNITS = st.sampled_from(
+    [
+        "days since 1950-01-01",
+        "hours since 2000-01-01",
+        "seconds since 1970-01-01 00:00:00",
+    ]
+)
+CF_TIMES = st.one_of(
+    st.floats(min_value=0, max_value=30000, allow_nan=False),
+    st.just(float("nan")),
+)
+
+
+@st.composite
+def profile_files(draw):
+    """One .npz profile file plus what its decode must show: the null
+    mask of each row-level column and the float id of each profile."""
+    n_prof, n_lev = draw(st.integers(1, 3)), draw(st.integers(1, 4))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    variables, attrs, nulls = {}, {}, {}
+    measurements = (("PRES", "pressure"), ("TEMP", "temperature"), ("PSAL", "salinity"))
+    for var, field in measurements:
+        if var != "PRES" and not draw(st.booleans()):
+            nulls[field] = np.ones(n_prof * n_lev, bool)
+            continue
+        dtype = draw(st.sampled_from(["float32", "float64", "int16"]))
+        fill = -32767 if dtype == "int16" else 99999.0
+        values = rng.integers(-1000, 1000, (n_prof, n_lev)).astype(dtype)
+        fill_key = draw(st.sampled_from([None, "_FillValue", "missing_value"]))
+        filled = (rng.random(values.shape) < 0.3) & (fill_key is not None)
+        values[filled] = fill
+        missing = filled.copy()
+        if dtype != "int16":
+            nan = rng.random(values.shape) < 0.1
+            values[nan] = np.nan
+            missing |= nan
+        variables[var] = values
+        if fill_key:
+            attrs[var] = {fill_key: fill}
+        nulls[field] = missing.ravel()
+    ids = [str(x) for x in rng.integers(1_900_000, 7_000_000, n_prof)]
+    id_kind = draw(st.sampled_from(["str", "bytes", "absent"]))
+    if id_kind == "str":
+        variables["PLATFORM_NUMBER"] = np.array(ids)
+    elif id_kind == "bytes":
+        variables["PLATFORM_NUMBER"] = np.array(ids, dtype="S7")
+        ids = [f"b'{i}'" for i in ids]
+    else:
+        ids = ["unknown"] * n_prof
+    times = draw(
+        st.one_of(st.none(), st.lists(CF_TIMES, min_size=n_prof, max_size=n_prof))
+    )
+    if times is None:
+        time_null = np.ones(n_prof, bool)
+    else:
+        name = draw(st.sampled_from(["JULD", "TIME", "time"]))
+        variables[name] = np.array(times)
+        attrs[name] = {"units": draw(TIME_UNITS)}
+        time_null = np.isnan(times)
+    nulls["time"] = np.repeat(time_null, n_lev)
+    for var, field in (("LATITUDE", "latitude"), ("LONGITUDE", "longitude")):
+        present = draw(st.booleans())
+        if present:
+            variables[var] = rng.uniform(-80, 80, n_prof)
+        nulls[field] = np.full(n_prof * n_lev, not present)
+    return npz_bytes(variables, attrs), np.repeat(ids, n_lev), nulls
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(profile_files(), min_size=1, max_size=5), st.integers(0, 12))
+def test_batch_decode_equals_per_file_decode(files, max_rows):
+    named = [(f"f{i}.nc", content) for i, (content, _, _) in enumerate(files)]
+    batches = list(decode_profile_batches(named, max_rows))
+    got = pa.Table.from_batches(batches, ARGO_ARROW_SCHEMA).combine_chunks()
+
+    per_file = []
+    for name, content in named:
+        pdf = decode_profile_file(name, content)
+        pdf["time"] = pdf["time"].dt.tz_localize("UTC")
+        per_file.append(pa.Table.from_pandas(pdf, ARGO_ARROW_SCHEMA, preserve_index=False))
+    want = pa.concat_tables(per_file).combine_chunks()
+    assert got.schema == ARGO_ARROW_SCHEMA
+    assert got.schema.field("time").type == pa.timestamp("us", tz="UTC")
+    assert got.equals(want)  # values, nulls and types
+
+    # ... and both match the files as drawn
+    assert got.column("float_id").to_pylist() == [
+        i for _, ids, _ in files for i in ids
+    ]
+    for field in files[0][2]:
+        want_null = np.concatenate([nulls[field] for _, _, nulls in files])
+        got_null = got.column(field).is_null().to_numpy(zero_copy_only=False)
+        assert got_null.tolist() == want_null.tolist(), field
+
+    # bounded batches: every batch but the last reached max_rows
+    if max_rows > 0:
+        assert all(b.num_rows >= max_rows for b in batches[:-1])
+    else:
+        assert len(batches) == 1
 
 
 # ---------------------------------------------------------------------------

@@ -96,6 +96,26 @@ def test_read_argo_fractional_day_time(spark, tmp_path):
     assert [r["time"] for r in rows] == [datetime.datetime(2020, 1, 15, 2, 24)] * 2
 
 
+def test_read_argo_instants_ignore_session_time_zone(fixture_dir, spark):
+    """CF times are UTC instants (reference preprocess.py:226): the
+    decoded `time` names the same instant whatever the session's time
+    zone is."""
+    from pyspark.sql import functions as F
+
+    def epochs():
+        df = read_argo(spark, fixture_dir).select(F.unix_timestamp("time"))
+        return sorted(r[0] for r in df.collect())
+
+    utc = epochs()
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        new_york = epochs()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    assert 1577836800 in utc  # 2020-01-01T00:00Z, the hours-since-2000 file
+    assert new_york == utc
+
+
 def test_inspect_report(fixture_dir, spark):
     rep = inspect_files(spark, fixture_dir)
     rows = rep.collect()

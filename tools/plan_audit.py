@@ -7,9 +7,9 @@ the structural signals that matter at 100 TB:
 - broadcast joins vs shuffle joins,
 - cartesian / broadcast-nested-loop joins (should be ~0 outside 1-row
   stat assemblies),
-- Python evaluation nodes (ArrowEvalPython / BatchEvalPython / FlatMap*
-  — the deliberate Arrow seams; row-at-a-time BatchEvalPython in a hot
-  path is a bug),
+- Python evaluation nodes (ArrowEvalPython / BatchEvalPython / MapIn* /
+  FlatMap* — the deliberate Arrow seams; row-at-a-time BatchEvalPython
+  in a hot path is a bug),
 - whether at least one scan carries PushedFilters.
 
 Queries whose BUILD phase executes jobs (ANN training, dup-cluster
@@ -96,7 +96,7 @@ def census_one(plan: str) -> tuple:
     n_py = len(
         re.findall(
             r"ArrowEvalPython|BatchEvalPython|FlatMapGroupsInPandas"
-            r"|MapInPandas|FlatMapCoGroupsInPandas",
+            r"|MapInPandas|MapInArrow|FlatMapCoGroupsInPandas",
             plan,
         )
     )
