@@ -2,8 +2,9 @@
 
 IVF (embeddings/search.py) prunes WHICH vectors to score; PQ compresses
 HOW each vector is scored: split every d-dim vector into `m` subvectors,
-learn a tiny codebook per subspace (the same deterministic spherical
-k-means as the IVF coarse quantizer, run on the subspace), and store
+learn a tiny codebook per subspace (deterministic spherical k-means by
+`train_codebooks`, the one Lloyd trainer, which also trains the IVF
+coarse quantizer as its single-subspace case), and store
 each vector as `m` small codes. A 64-d float vector (256 B) becomes 4
 codes (4 B) — the 64× memory cut that lets a 100 TB corpus' index live
 in executor memory instead of being rescanned per query (FAISS IVF-PQ,
@@ -54,20 +55,11 @@ def pq_train(
     id_col: str = "vec_id",
     cache_key: str | None = None,
 ) -> list[list[tuple[int, list[float]]]]:
-    """Train the m per-subspace codebooks: subspace s is dims
-    [s·dsub, (s+1)·dsub) and its codebook is the deterministic spherical
-    k-means of the subvectors — per-subspace semantics identical to
-    `kmeans_centroids` (lowest-id seeds, 6dp-rounded cosine argmax,
-    rounded-sum means), so each subspace replays with the same oracle
-    SQL as the IVF quantizer.
-
-    All m subspaces train JOINTLY: one seed collect and ONE Spark job
-    per Lloyd iteration computing every subspace's assignments and
-    means together (assignment columns are m map-only argmax
-    expressions; the (s, cluster, pos) mean aggregation carries all
-    subspaces in a single shuffle of m·ksub·dsub cells). Training m
-    codebooks sequentially would pay m× the per-job latency for the
-    same arithmetic — measured 12 s → <2 s at m=16 on the test corpus.
+    """Train the m per-subspace codebooks (`train_codebooks`): subspace s
+    is dims [s·dsub, (s+1)·dsub), dsub = dim // m, and its codebook is
+    the deterministic spherical k-means of the subvectors — the same
+    trainer as `kmeans_centroids`, so each subspace replays with the
+    same oracle SQL as the IVF quantizer.
 
     Returns [codebook_s][cid] -> centroid subvector."""
     return memo.lookup(
@@ -75,78 +67,101 @@ def pq_train(
         cache_key,
         (dim, m, ksub, iters, vec_col, id_col),
         emb,
-        lambda: _train_codebooks(emb, dim, m, ksub, iters, vec_col, id_col),
+        lambda: train_codebooks(emb, m, ksub, iters, vec_col, id_col, dim),
     )
 
 
-def _train_codebooks(
+def train_codebooks(
     emb: DataFrame,
-    dim: int,
     m: int,
     ksub: int,
     iters: int,
     vec_col: str,
     id_col: str,
+    dim: int | None = None,
 ) -> list[list[tuple[int, list[float]]]]:
-    dsub = dim // m
-    base = emb.select(
+    """Deterministic spherical k-means on each of `m` subspaces, trained
+    jointly: PQ's codebooks, and with m = 1 and `dim` None (the whole
+    vector is the one subspace) the IVF/SemDedup coarse quantizer of
+    `kmeans_centroids`.
+
+    Seeds are the `ksub` lowest-id vectors renumbered 0..ksub-1. Each
+    Lloyd iteration assigns every vector in every subspace (`pq_codes`:
+    6dp-rounded cosine argmax, lowest-cid ties) and recomputes centroids
+    as per-position means `round(sum, 6) / n` — the rounded sum makes the
+    value partial-aggregation-order independent, and the quotient stays a
+    raw IEEE double because an outer round lands on decimal half
+    boundaries (short-decimal sums over integer counts) that Spark and
+    DuckDB round in opposite directions. Rows with a null vector take no
+    part. Clusters left empty by an iteration drop out, so cids can have
+    gaps.
+
+    Plan shape: one seed collect and ONE Spark job per iteration for all
+    m subspaces. The assignment is map-only (m argmax expressions), and
+    one posexplode over vector positions (subspace = pos div dsub,
+    cluster = that subspace's code) feeds a (subspace, cluster, pos)
+    mean aggregation, partial-aggregated inside the map stage, so the
+    shuffle carries m·ksub·dsub cells per partition, never the exploded
+    corpus. The result is collected and re-literalized per iteration: it
+    is model state, and cutting the lineage keeps iteration i from
+    re-running iterations 1..i-1's corpus passes. Training m codebooks
+    sequentially would pay m× the per-job latency for the same
+    arithmetic — measured 12 s → <2 s at m=16 on the test corpus.
+
+    Returns [codebook_s][cid] -> centroid subvector, cids ascending."""
+    base = emb.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
     )
+    if dim is None:
+        spans, vals, sub = [(0, None)], F.col(vec_col), F.lit(0)
+    else:
+        dsub = dim // m
+        spans = [(s * dsub, (s + 1) * dsub) for s in range(m)]
+        vals = F.slice(F.col(vec_col), 1, m * dsub)
+        sub = F.expr(f"CAST(_pos div {dsub} AS INT)")
     seed_rows = base.orderBy(id_col).limit(ksub).collect()
     books = [
         [
-            (i, [float(x) for x in r[vec_col][s * dsub : (s + 1) * dsub]])
+            (i, [float(x) for x in r[vec_col][lo:hi]])
             for i, r in enumerate(seed_rows)
         ]
-        for s in range(m)
+        for lo, hi in spans
     ]
     for _ in range(iters):
         # persist = a CollapseProject barrier, not (only) a cache: the
         # optimizer otherwise inlines the m-argmax `_codes` expression
         # into the Generate pipeline below and re-evaluates the whole
-        # interpreted HOF argmax per EXPLODED row (m·dsub times per
-        # vector) — measured 13.5 s → 4.7 s per Lloyd pass at sf0.1
-        # from this one barrier.
+        # interpreted HOF argmax per EXPLODED row (d times per vector) —
+        # measured 13.5 s → 4.7 s per Lloyd pass at sf0.1 from this one
+        # barrier.
         assigned = base.select(
             pq_codes(f"`{vec_col}`", books, dim).alias("_codes"),
             F.col(vec_col),
         ).persist()
         cells = (
-            assigned.select(
-                F.posexplode("_codes").alias("s", "cluster"),
-                F.col(vec_col),
-            )
+            assigned.select("_codes", F.posexplode(vals).alias("_pos", "val"))
             .select(
-                "s",
-                "cluster",
-                F.posexplode(
-                    F.slice(
-                        F.col(vec_col), F.col("s") * dsub + 1, dsub
-                    )
-                ).alias("pos", "val"),
+                sub.alias("s"),
+                F.element_at("_codes", sub + 1).alias("cluster"),
+                "_pos",
+                "val",
             )
-            .groupBy("s", "cluster", "pos")
-            .agg(
-                # rounded sum / raw quotient — same parity rule as
-                # kmeans_centroids (no outer round on quotients)
-                (F.round(F.sum("val"), 6) / F.count(F.lit(1))).alias("mval")
-            )
+            .groupBy("s", "cluster", "_pos")
+            .agg((F.round(F.sum("val"), 6) / F.count(F.lit(1))).alias("mval"))
             .collect()
         )
         assigned.unpersist()
-        new_books: list[dict[int, dict[int, float]]] = [
-            {} for _ in range(m)
-        ]
+        new_books: list[dict[int, dict[int, float]]] = [{} for _ in spans]
         for r in cells:
-            new_books[r["s"]].setdefault(r["cluster"], {})[r["pos"]] = r[
+            new_books[r["s"]].setdefault(r["cluster"], {})[r["_pos"]] = r[
                 "mval"
             ]
         books = [
             [
                 (cid, [poss[p] for p in sorted(poss)])
-                for cid, poss in sorted(new_books[s].items())
+                for cid, poss in sorted(book.items())
             ]
-            for s in range(m)
+            for book in new_books
         ]
     return books
 
@@ -154,7 +169,7 @@ def _train_codebooks(
 def pq_codes(
     vec,
     codebooks: list[list[tuple[int, list[float]]]],
-    dim: int,
+    dim: int | None,
 ):
     """All m code assignments as one array<int> column: entry s is the
     subvector's nearest codebook-s entry (6dp-rounded cosine argmax,
@@ -174,11 +189,17 @@ def pq_codes(
     norms) was also tried: bit-identical, but 3× slower end-to-end —
     the ~15k-node projection pushes Janino codegen from ~1 s to ~15 s,
     dwarfing what it saves in interpreted HOF evaluation. The fold
-    form is the measured optimum at these shapes."""
+    form is the measured optimum at these shapes.
+
+    With `dim` None there is one codebook and its subvector is `vec`
+    itself: a slice would be re-evaluated inside the argmax's
+    per-centroid lambda (measured ~25% slower k-means training at k=45)."""
     from floatchat_datapipeline_spark.embeddings.search import (
         nearest_centroid,
     )
 
+    if dim is None:
+        return F.array(nearest_centroid(vec, codebooks[0]))
     m = len(codebooks)
     dsub = dim // m
     if isinstance(vec, str):

@@ -16,6 +16,14 @@ are ``sin(997·p + d)`` — deterministic and expressible in any engine, so
 the DuckDB oracle can replay bucketing exactly. Candidates = same
 signature bucket; exact cosine re-ranks inside the bucket. Recall/cost is
 tuned by n_planes (each plane halves the expected bucket).
+
+``ann_ivf_topk`` is IVF-flat: a spherical k-means coarse quantizer (the
+same Lloyd trainer as PQ's codebooks, `pq.train_codebooks`, on one
+subspace) assigns each vector to a cluster once per corpus version. A
+query is ONE plan: the query row is read out of the memoized inverted
+lists, its `nprobe` nearest centroids are ranked on that row by the
+same SQL expression that assigns vectors (`nearest_centroids`), and the
+row is broadcast to keep only candidates in those clusters.
 """
 
 from __future__ import annotations
@@ -53,14 +61,9 @@ def semantic_search(
     qvec = F.array(*[F.lit(x) for x in encode_query(query_text)])
     if where is not None:
         docs = docs.filter(where)
-    if VEC_COL in docs.columns:
-        vecs = docs.filter(F.col(VEC_COL).isNotNull()).select(
-            F.col(id_col), F.col(VEC_COL).alias("_vec")
-        )
-    else:
-        vecs = docs.select(F.col(id_col), encode_text(text_col).alias("_vec"))
     return (
-        vecs.select(
+        _doc_vectors(docs, text_col, id_col)
+        .select(
             id_col,
             F.round(cosine(F.col("_vec"), qvec), 6).alias("score"),
         )
@@ -69,47 +72,40 @@ def semantic_search(
     )
 
 
-def lsh_signature(
-    vec_col: Column | str, n_planes: int = N_PLANES, dim: int | None = None
-) -> Column:
+def _doc_vectors(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, _vec) per doc: the stored ``embedding`` column when `docs` has
+    one, leaving rows with a null vector out; otherwise `text_col`
+    encoded per row."""
+    if VEC_COL in docs.columns:
+        return docs.filter(F.col(VEC_COL).isNotNull()).select(
+            F.col(id_col), F.col(VEC_COL).alias("_vec")
+        )
+    return docs.select(F.col(id_col), encode_text(text_col).alias("_vec"))
+
+
+def lsh_signature(vec_col: Column | str, n_planes: int = N_PLANES) -> Column:
     """Random-hyperplane signature: bit p = [dot(v, plane_p) >= 0] where
     plane_p[d] = sin(997·p + d). Pure JVM expression.
 
-    With `dim` unset the plane length follows the vector's own length
-    (F.size), so the same expression serves the 64-d stub encoder and a
-    384-d real encoder — a fixed-length plane would null-pad the zip and
-    silently collapse every vector into one bucket. With `dim` set, the
-    plane components are FOLDABLE `F.sin(lit)` subexpressions in a
-    codegen-able expansion: Catalyst constant-folds them with the same
-    JVM sin the default path evaluates at runtime, so both paths and the
-    DuckDB oracle bucket identically. (A Python `math.sin` literal here
-    is NOT safe — it differs from JVM sin in the last ulp for 8 of the
-    3072 plane args at dim=384.) Measured trade-off: the n_planes×dim
-    expression tree costs seconds of Catalyst analysis/codegen per plan,
-    so it only pays off when row count is large enough to amortize it
-    (millions of rows); default None is faster at test scale."""
+    The plane length follows the vector's own length (F.size), so the
+    same expression serves the 64-d stub encoder and a 384-d real
+    encoder — a fixed-length plane would null-pad the zip and silently
+    collapse every vector into one bucket."""
     v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     bits = []
     for p in range(n_planes):
-        if dim is not None:
-            dot = F.lit(0.0)
-            for d in range(dim):
-                dot = dot + F.element_at(v, d + 1).cast("double") * F.sin(
-                    F.lit(float(997 * p + d))
-                )
-        else:
-            dot = F.aggregate(
-                F.zip_with(
-                    v.cast("array<double>"),
-                    F.transform(
-                        F.sequence(F.lit(0), F.size(v) - 1),
-                        lambda d: F.sin(F.lit(997 * p) + d.cast("double")),
-                    ),
-                    lambda a, b: a * b,
+        dot = F.aggregate(
+            F.zip_with(
+                v.cast("array<double>"),
+                F.transform(
+                    F.sequence(F.lit(0), F.size(v) - 1),
+                    lambda d: F.sin(F.lit(997 * p) + d.cast("double")),
                 ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
+                lambda a, b: a * b,
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
         bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
     return F.concat(*bits)
 
@@ -121,15 +117,15 @@ def ann_lsh_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     n_planes: int = N_PLANES,
-    dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k for the stored vector `query_id`: candidates
     share its LSH signature; exact cosine re-ranks them. The signature
-    equi-join shuffles by bucket key — never a cross join."""
-    keyed = emb.select(
+    equi-join shuffles by bucket key — never a cross join. Rows with a
+    null vector are left out (their signature would be all zeros)."""
+    keyed = emb.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col),
         F.col(vec_col),
-        lsh_signature(vec_col, n_planes, dim).alias("sig"),
+        lsh_signature(vec_col, n_planes).alias("sig"),
     )
     q = keyed.filter(F.col(id_col) == query_id).select(
         F.col(vec_col).alias("qvec"), F.col("sig").alias("qsig")
@@ -139,9 +135,7 @@ def ann_lsh_topk(
         .join(F.broadcast(q), F.col("sig") == F.col("qsig"))
         .select(
             id_col,
-            F.round(cosine(F.col(vec_col), F.col("qvec"), dim), 6).alias(
-                "score"
-            ),
+            F.round(cosine(F.col(vec_col), F.col("qvec")), 6).alias("score"),
         )
         .orderBy(F.desc("score"), F.col(id_col))
         .limit(k)
@@ -173,10 +167,12 @@ def semantic_search_batch(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Many queries in ONE job: the corpus is encoded once, the encoded
+    """Many queries in ONE job: the corpus is scanned once, the encoded
     query set is broadcast, and a per-query window takes top-k. This is
     the shape batch retrieval takes at scale — N queries over a 100 TB
-    corpus cost one corpus scan, not N.
+    corpus cost one corpus scan, not N. Docs get their vectors by
+    `semantic_search`'s rule: a stored ``embedding`` column is scored
+    (null vectors left out), otherwise `text_col` is encoded once.
 
     Output: (query_id, id, score, rank)."""
     from pyspark.sql import Window
@@ -184,7 +180,7 @@ def semantic_search_batch(
     spark = docs.sparkSession
     enc = [(qid, encode_query(text)) for qid, text in queries.items()]
     qdf = spark.createDataFrame(enc, "query_id string, qvec array<double>")
-    doc_vec = docs.select(F.col(id_col), encode_text(text_col).alias("_vec"))
+    doc_vec = _doc_vectors(docs, text_col, id_col)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col(id_col))
     return (
         doc_vec.crossJoin(F.broadcast(qdf))
@@ -274,6 +270,22 @@ def nearest_centroid(
     return (-best.getField("neg_cid")).cast("int")
 
 
+def nearest_centroids(
+    vec_sql: str, cents: list[tuple[int, list[float]]], n: int
+) -> Column:
+    """The ids of the `n` centroids nearest to `vec_sql` (SQL text), as
+    array<int>, nearest first: by 6dp-rounded cosine descending, then
+    lowest cid — the order whose head is `nearest_centroid`'s argmax.
+    The same (sim, neg_cid) structs, sorted ascending and reversed, then
+    the first `n` taken. This is the IVF probe: one expression on the
+    query row, no centroid table and no join."""
+    sims = _centroid_sims_sql(vec_sql, cents)
+    return F.expr(
+        f"transform(slice(reverse(array_sort({sims})), 1, {int(n)}), "
+        "s -> -s.neg_cid)"
+    )
+
+
 def _nearest_centroid_sql(
     vec_sql: str, cents: list[tuple[int, list[float]]]
 ) -> str:
@@ -281,6 +293,16 @@ def _nearest_centroid_sql(
     rendered as Spark-SQL text: identical function composition (aggregate
     folds from 0.0 double, zip_with products, 6dp round before argmax,
     neg-cid tie-break), so the parsed tree evaluates bit-identically."""
+    sims = _centroid_sims_sql(vec_sql, cents)
+    return f"CAST(-((array_max({sims})).neg_cid) AS INT)"
+
+
+def _centroid_sims_sql(
+    vec_sql: str, cents: list[tuple[int, list[float]]]
+) -> str:
+    """array<struct<sim, neg_cid>> of `vec_sql` against every centroid,
+    as SQL text: sim is the 6dp-rounded cosine (-2.0 where undefined),
+    neg_cid the negated cid, so struct order is the ranking order."""
     mat = ", ".join(
         "array(" + ", ".join(_double_sql(x) for x in cvec) + ")"
         for _, cvec in cents
@@ -309,10 +331,10 @@ def _nearest_centroid_sql(
         f"CAST(0.0 AS DOUBLE)), 6), CAST(-2.0 AS DOUBLE))"
     )
     return (
-        f"CAST(-((array_max(zip_with(array({mat}), array({cids}), "
+        f"zip_with(array({mat}), array({cids}), "
         f"(cvec, cid) -> named_struct("
         f"'sim', {sim_sql}, "
-        f"'neg_cid', -cid)))).neg_cid) AS INT)"
+        f"'neg_cid', -cid))"
     )
 
 
@@ -332,87 +354,30 @@ def kmeans_centroids(
     Seeds are the `n_centroids` lowest-id vectors renumbered 0..k-1; each
     iteration reassigns every vector (cosine argmax, 6dp-rounded for
     cross-engine tie stability) and recomputes centroids as per-position
-    means. Means are computed IN SPARK as `round(sum,6)/n` — the rounded
-    sum makes the value partial-aggregation-order independent, and the
-    quotient stays a raw IEEE double because an outer round lands on
-    decimal half boundaries (short-decimal sums over integer counts) that
-    Spark and DuckDB round in opposite directions.
-
-    Plan shape: each Lloyd iteration is ONE map-only assignment expression
-    (`nearest_centroid`, no shuffle) feeding a posexplode →
-    groupBy(cluster, pos) mean — the d× row fan-out is pipelined inside
-    the map stage and partial-aggregated there, so the shuffle carries
-    only k×d rows per partition, never the exploded corpus. The k×d
-    result is collected and re-literalized per iteration:
-    it is model state (metadata scale), and cutting the lineage keeps
-    iteration i from re-running iterations 1..i-1's corpus passes — Lloyd
-    is O(iters · corpus), not O(iters² · corpus). FAISS trains its coarse
-    quantizer the same way (sampled, driver-side); the full-corpus pass
-    here is exact at test scale and would train on a sample at 100 TB.
+    means of the rounded sums. Rows with a null vector take no part. The
+    trainer is PQ's (`pq.train_codebooks`) on a single subspace, the whole
+    vector; its docstring has the plan shape and the parity rules.
 
     Output: [(cid, centroid_vector)] sorted by cid — driver-side model
-    state, ready to inline into `nearest_centroid`.
+    state, ready to inline into `nearest_centroid`. FAISS trains its
+    coarse quantizer the same way (sampled, driver-side); the full-corpus
+    pass here is exact at test scale and would train on a sample at
+    100 TB.
 
     `cache_key` (an explicit corpus identity, e.g. the source path)
     memoizes the trained quantizer: training costs 2·iters corpus passes
     and is paid once per corpus version, not once per query (the FAISS
     index lifecycle).
     """
+    from floatchat_datapipeline_spark.embeddings.pq import train_codebooks
+
     return memo.lookup(
         "ivf-centroids",
         cache_key,
         (n_centroids, iters, vec_col, id_col),
         emb,
-        lambda: _train_centroids(emb, n_centroids, iters, vec_col, id_col),
+        lambda: train_codebooks(emb, 1, n_centroids, iters, vec_col, id_col)[0],
     )
-
-
-def _train_centroids(
-    emb: DataFrame, n_centroids: int, iters: int, vec_col: str, id_col: str
-) -> list[tuple[int, list[float]]]:
-    base = emb.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
-    )
-    seed_rows = base.orderBy(id_col).limit(n_centroids).collect()
-    cents = [
-        (i, [float(x) for x in r[vec_col]]) for i, r in enumerate(seed_rows)
-    ]
-    for _ in range(iters):
-        # persist = a CollapseProject barrier (the pq_train rule): the
-        # optimizer otherwise inlines the argmax into the posexplode
-        # pipeline and re-evaluates it per exploded row — d× per vector.
-        assigned = base.withColumn(
-            "cluster", nearest_centroid(f"`{vec_col}`", cents)
-        ).persist()
-        comp = (
-            assigned.select(
-                "cluster", F.posexplode(vec_col).alias("_pos", "_val")
-            )
-            .groupBy("cluster", "_pos")
-            .agg(
-                # round the SUM (order-independence); the quotient stays a
-                # raw IEEE double — an outer round lands on decimal half
-                # boundaries for short-decimal/int quotients and Spark and
-                # DuckDB round those in opposite directions (see
-                # operators/windows.py hourly_rollup note)
-                (F.round(F.sum("_val"), 6) / F.count(F.lit(1))).alias("_m")
-            )
-        )
-        rows = (
-            comp.groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("_pos", "_m"))),
-                    lambda s: s.getField("_m"),
-                ).alias("_cvec")
-            )
-            .collect()
-        )
-        assigned.unpersist()
-        cents = sorted(
-            (int(r["cluster"]), [float(x) for x in r["_cvec"]]) for r in rows
-        )
-    return cents
 
 
 def ann_ivf_topk(
@@ -425,16 +390,21 @@ def ann_ivf_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     cache_key: str | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
     """IVF probe: search the query's `nprobe` nearest clusters, exact
     cosine re-rank within. At scale the cluster assignment is precomputed
     and the probe reads nprobe partitions of a cluster-partitioned table —
     the standard billion-vector layout (FAISS IVF-flat with trained coarse
     quantizer and multi-probe). Pass `cache_key` to reuse a previously
-    trained quantizer for the same corpus."""
+    trained quantizer for the same corpus.
+
+    One plan, one broadcast: the query row is read out of the assigned
+    corpus, its probe list (`nearest_centroids`, the 6dp cosine / lowest
+    cid order) is computed on that row, and the row is broadcast to keep
+    candidates whose cluster is in the list. Rows with a null vector are
+    not indexed."""
     cents = kmeans_centroids(emb, n_centroids, iters, vec_col, id_col, cache_key)
-    base = emb.select(
+    base = emb.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
     )
 
@@ -460,33 +430,16 @@ def ann_ivf_topk(
     # Read the query vector out of the (possibly cached) assigned table —
     # under a warm index this is an in-memory lookup, not a parquet scan.
     q = assigned.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("qvec")
-    )
-    cents_df = emb.sparkSession.createDataFrame(
-        cents, "_cid int, _cvec array<double>"
-    )
-    probe = (
-        cents_df.crossJoin(F.broadcast(q))
-        .select(
-            "_cid",
-            F.round(cosine(F.col("_cvec"), F.col("qvec"), dim), 6).alias(
-                "_sim"
-            ),
-        )
-        .orderBy(F.desc("_sim"), F.col("_cid"))
-        .limit(nprobe)
-        .select(F.col("_cid").alias("probe_cluster"))
+        F.col(vec_col).alias("qvec"),
+        nearest_centroids(f"`{vec_col}`", cents, nprobe).alias("probe"),
     )
     return (
         assigned.filter(F.col(id_col) != query_id)
-        .join(F.broadcast(probe), F.col("cluster") == F.col("probe_cluster"))
-        .crossJoin(F.broadcast(q))
+        .join(F.broadcast(q), F.array_contains("probe", F.col("cluster")))
         .select(
             id_col,
             "cluster",
-            F.round(cosine(F.col(vec_col), F.col("qvec"), dim), 6).alias(
-                "score"
-            ),
+            F.round(cosine(F.col(vec_col), F.col("qvec")), 6).alias("score"),
         )
         .orderBy(F.desc("score"), F.col(id_col))
         .limit(k)

@@ -14707,17 +14707,20 @@ def q_ann_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     test SFs. V15 certifies one operating point; this sweeps the knob
     every ANN deployment tunes before pinning nprobe.
 
-    Scale: ONE memoized quantizer training feeds everything; the ann
-    leg reads the assigned table once for all 15 (query, nprobe)
-    combinations (the probe-cluster join replicates only matching
-    inverted lists); the exact leg is one corpus scan against the
-    5-vector broadcast. Windows partition by (nprobe, qid) — bounded,
-    never global."""
+    Scale: ONE memoized quantizer training feeds everything; each
+    query's 4 nearest clusters are ranked on its own row by the IVF
+    probe expression (`nearest_centroids`), so no centroid table is
+    built; the ann leg reads the assigned table once for all 15 (query,
+    nprobe) combinations (the probe-cluster join replicates only
+    matching inverted lists); the exact leg is one corpus scan against
+    the 5-vector broadcast. Windows partition by (nprobe, qid) —
+    bounded, never global."""
     from pyspark.sql import Window
 
     from floatchat_datapipeline_spark.embeddings.search import (
         kmeans_centroids,
         nearest_centroid,
+        nearest_centroids,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -14742,28 +14745,23 @@ def q_ann_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "vec_id")
         .localCheckpoint(eager=True)
     )
-    cents_df = spark.createDataFrame(cents, "_cid int, _cvec array<double>")
-    rc = (
-        cents_df.crossJoin(F.broadcast(qs))
-        .select(
+    # (qid, probe_cluster, nprobe) for each cluster of 0-based rank r < 4
+    # and each nprobe ∈ {1, 2, 4} with r < nprobe
+    probes = (
+        qs.select(
             "qid",
-            "_cid",
-            F.round(cosine(F.col("_cvec"), F.col("qvec")), 6).alias("_s"),
-        )
-        .withColumn(
-            "r",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("_s"), "_cid")
+            F.posexplode(nearest_centroids("qvec", cents, 4)).alias(
+                "_r", "probe_cluster"
             ),
         )
-        .filter(F.col("r") <= 4)
-        .select("qid", F.col("_cid").alias("probe_cluster"), "r")
-    )
-    nps = spark.range(0).sparkSession.createDataFrame(
-        [(1,), (2,), (4,)], "nprobe long"
-    )
-    probes = rc.crossJoin(F.broadcast(nps)).filter(
-        F.col("r") <= F.col("nprobe")
+        .select(
+            "qid",
+            "probe_cluster",
+            "_r",
+            F.explode(F.array(*[F.lit(n).cast("long") for n in (1, 2, 4)]))
+            .alias("nprobe"),
+        )
+        .filter(F.col("_r") < F.col("nprobe"))
     )
     assigned = base.withColumn(
         "cluster", nearest_centroid("vec", cents)
